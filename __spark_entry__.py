@@ -1533,10 +1533,12 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1 GiB of lineitem parquet ≈ 10x the sf1 scale where the
     # duplicate chain last measured cheaper. Identical multisets
     # either way (oracle-pinned); SPARK_GRAFT_Q21_LARGE_BYTES
-    # overrides for the forced-large test.
-    large_bytes = int(
-        os.environ.get("SPARK_GRAFT_Q21_LARGE_BYTES", str(1 << 30))
-    )
+    # overrides for the forced-large test; a malformed value keeps
+    # the 1 GiB default, as _table_bytes keeps the bench-scale form.
+    try:
+        large_bytes = int(os.environ["SPARK_GRAFT_Q21_LARGE_BYTES"])
+    except (KeyError, ValueError):
+        large_bytes = 1 << 30
     if _table_bytes(spark, sf_dir, "lineitem") >= large_bytes:
         from pyspark.sql.window import Window as _W
 

@@ -23,10 +23,40 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..operators import dedup as dedup_ops
 from ..operators import text as text_ops
+
+
+def _read_state(
+    spark: SparkSession,
+    state_dir: str,
+    cols: tuple[str, ...],
+    exclude_epoch: Optional[int] = None,
+) -> Optional[DataFrame]:
+    """The accepted-state table of a stream dedup (``cols`` of the
+    parquet under ``state_dir``), or None before the first write.
+
+    Only PATH_NOT_FOUND means "no state": a transient IO, permission
+    or corruption error must PROPAGATE so foreachBatch retries the
+    micro-batch — swallowing it would dedup the batch against nothing
+    and permanently admit duplicates into the accepted set. With
+    ``exclude_epoch`` a RETRIED micro-batch does not dedup against its
+    own prior contribution (it would drop every row, then overwrite
+    its epoch directory with nothing)."""
+
+    try:
+        df = spark.read.parquet(state_dir)
+    except AnalysisException as exc:
+        msg = str(exc)
+        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+            return None
+        raise
+    if exclude_epoch is not None and "epoch" in df.columns:
+        df = df.filter(F.col("epoch") != exclude_epoch)
+    return df.select(*cols)
 
 
 def stream_exact_dedup(
@@ -127,29 +157,6 @@ class StreamNearDedup:
             f"0, (acc, v) -> acc + v) / {self.k}"
         )
 
-    def _state(self, exclude_epoch: Optional[int] = None) -> Optional[DataFrame]:
-        # Only "state dir not written yet" may mean "no state" — the
-        # StreamSemDeDup error discipline (ADVICE r8): a transient
-        # IO error must propagate so foreachBatch retries, not dedup
-        # the batch against nothing.
-        try:
-            from pyspark.errors import AnalysisException
-        except ImportError:  # pragma: no cover - pyspark < 3.4
-            from pyspark.sql.utils import AnalysisException
-        try:
-            df = self.spark.read.parquet(self.state_dir)
-        except AnalysisException as exc:
-            msg = str(exc)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None
-            raise
-        if exclude_epoch is not None and "epoch" in df.columns:
-            # A RETRIED micro-batch must not dedup against its own
-            # prior contribution — it would drop every doc and then
-            # overwrite its epoch directory with nothing.
-            df = df.filter(F.col("epoch") != exclude_epoch)
-        return df
-
     # -- one epoch ---------------------------------------------------
     def process_batch(
         self, batch: DataFrame, epoch: Optional[int] = None
@@ -173,7 +180,9 @@ class StreamNearDedup:
         banded = self._band_keys(sigs)
 
         dropped = None
-        state = self._state(exclude_epoch=epoch)
+        state = _read_state(
+            self.spark, self.state_dir, ("doc_id", "sig"), epoch
+        )
         if state is not None:
             vs_state = (
                 banded.join(
@@ -315,7 +324,7 @@ class StreamSemDeDup:
     micro-batch: assign batch vectors to cells against the broadcast
     centroids (one map-side pass), compute within-cell cosines of
     batch∪state rows via the Arrow-batched pair engine
-    (``curation._numpy_cell_pairs`` — the same dim-ascending kernel
+    (``curation._cell_pairs`` — the same dim-ascending kernel
     the batch operator uses), drop a batch doc that pairs >= threshold
     with ANY accepted doc or with a LOWER-id batch doc (greedy, one
     pass — the documented over-suppression trade), append survivors.
@@ -355,27 +364,6 @@ class StreamSemDeDup:
             "cell long, cv array<double>",
         )
 
-    def _state(self, exclude_epoch: Optional[int] = None) -> Optional[DataFrame]:
-        # Only "state dir not written yet" may mean "no state": a
-        # transient IO/permission/corruption error must PROPAGATE so
-        # foreachBatch retries the micro-batch — swallowing it would
-        # dedup the batch against nothing and permanently admit
-        # semantic duplicates into the accepted set (ADVICE r8).
-        try:
-            from pyspark.errors import AnalysisException
-        except ImportError:  # pragma: no cover - pyspark < 3.4
-            from pyspark.sql.utils import AnalysisException
-        try:
-            df = self.spark.read.parquet(self.state_dir)
-        except AnalysisException as exc:
-            msg = str(exc)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None
-            raise
-        if exclude_epoch is not None and "epoch" in df.columns:
-            df = df.filter(F.col("epoch") != exclude_epoch)
-        return df.select("id", "v", "cell")
-
     def process_batch(
         self, batch: DataFrame, epoch: Optional[int] = None
     ) -> DataFrame:
@@ -401,17 +389,17 @@ class StreamSemDeDup:
             .join(assign.withColumnRenamed("vec_id", "id"), "id")
             .localCheckpoint(eager=True)  # reused: pairs + survivors
         )
-        state = self._state(exclude_epoch=epoch)
+        state = _read_state(
+            self.spark, self.state_dir, ("id", "v", "cell"), epoch
+        )
         if state is None:
             resent = None
             allr = b.withColumn("__new", F.lit(True))
         else:
             # A batch row whose id is ALREADY accepted is a literal
             # re-send of an accepted doc: suppress it explicitly
-            # (first-accepted wins) and keep it out of the pair engine
-            # — the numpy kernel matches the JVM's strict a < b and
-            # emits NO pair for equal ids, so the old implicit
-            # self-pair side effect no longer exists (ADVICE r8).
+            # (first-accepted wins) and keep it out of the pair kernel,
+            # which emits NO pair for equal ids (strict a < b).
             resent = b.select("id").join(
                 state.select("id"), "id", "left_semi"
             )
@@ -419,14 +407,7 @@ class StreamSemDeDup:
             allr = state.withColumn("__new", F.lit(False)).unionByName(
                 fresh.withColumn("__new", F.lit(True))
             )
-        pairs = curation_ops._numpy_cell_pairs(
-            allr, self.threshold, self.dim
-        )
-        if pairs is None:  # pragma: no cover - numpy is baked in here
-            raise RuntimeError(
-                "StreamSemDeDup needs numpy/pandas (the Arrow pair "
-                "engine); install them or use the batch semdedup"
-            )
+        pairs = curation_ops._cell_pairs(allr, self.threshold, self.dim)
         flags = allr.select("id", "__new")
         p = (
             pairs.join(flags.toDF("a", "__na"), "a")
@@ -811,24 +792,6 @@ class StreamFuzzyDedup:
             "id", "s", F.explode(v).alias("__v")
         ).select("id", "s", F.xxhash64("__v").alias("__k"))
 
-    def _state(self, exclude_epoch: Optional[int] = None) -> Optional[DataFrame]:
-        # Only "state dir not written yet" may mean "no state" — the
-        # StreamSemDeDup error discipline (ADVICE r8).
-        try:
-            from pyspark.errors import AnalysisException
-        except ImportError:  # pragma: no cover - pyspark < 3.4
-            from pyspark.sql.utils import AnalysisException
-        try:
-            df = self.spark.read.parquet(self.state_dir)
-        except AnalysisException as exc:
-            msg = str(exc)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None
-            raise
-        if exclude_epoch is not None and "epoch" in df.columns:
-            df = df.filter(F.col("epoch") != exclude_epoch)
-        return df.select("id", "s")
-
     # -- one epoch ---------------------------------------------------
     def process_batch(
         self, batch: DataFrame, epoch: Optional[int] = None
@@ -843,7 +806,7 @@ class StreamFuzzyDedup:
         )
         keyed = named.filter(F.col("s").isNotNull())
         bvar = self._variants(keyed).localCheckpoint(eager=True)
-        state = self._state(exclude_epoch=epoch)
+        state = _read_state(self.spark, self.state_dir, ("id", "s"), epoch)
         dropped = None
         if state is not None:
             svar = self._variants(state)

@@ -498,9 +498,11 @@ class IncrementalAggregate:
         ):
             raise ValueError(f"unsupported incremental fn {aggregation_fn}")
         self.dj = delta_join
-        self.keys = list(key_variables)
+        # Maintainers emit str(variable) columns; reference-shaped wire
+        # plans carry integer variables.
+        self.keys = [str(k) for k in key_variables]
         self.fn = aggregation_fn
-        self.agg_var = aggregation_variable
+        self.agg_var = str(aggregation_variable)
         self.state: Optional[DataFrame] = None  # keys + __v + __w
         if (
             seed_from_snapshots

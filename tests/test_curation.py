@@ -227,28 +227,56 @@ def test_semdedup_within_cluster_pairs_match_brute_force(spark):
 
 
 def test_semdedup_numpy_and_jvm_pair_engines_agree(spark):
-    # The Arrow-batched numpy pair engine accumulates outer products
-    # dim-ascending — the SQL chain's exact fold order — so the kept
-    # (a, b, cos) set must be BIT-identical to the all-JVM equi-join
-    # path (forced here by stubbing the numpy engine out).
+    # The Arrow-batched pair kernel must keep exactly the (a, b, cos)
+    # set a pure-Python reference keeps over the same k-means cells:
+    # float64 dots and norms accumulated in ascending dimension order,
+    # the raw cosine rounded through Spark's F.round (HALF_UP on the
+    # exact decimal, not Python's half-even), then thresholded.
+    import math
     import random
+
+    from pyspark.sql import functions as F
+
+    from declarative_dataflow_spark.operators import similarity
 
     rng = random.Random(23)
     rows = [
         (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out_np = curation.semdedup(df, k=3, iters=1, threshold=0.6)
-    got_np = sorted(tuple(r) for r in out_np.collect())
-    real = curation._numpy_cell_pairs
-    curation._numpy_cell_pairs = lambda *a, **k: None
-    try:
-        out_jvm = curation.semdedup(df, k=3, iters=1, threshold=0.6)
-        got_jvm = sorted(tuple(r) for r in out_jvm.collect())
-    finally:
-        curation._numpy_cell_pairs = real
-    assert got_np == got_jvm
-    assert len(got_np) > 0  # the comparison must be load-bearing
+    got = sorted(
+        tuple(r)
+        for r in curation.semdedup(df, k=3, iters=1, threshold=0.6).collect()
+    )
+
+    cells = {
+        r["vec_id"]: r["cell"]
+        for r in similarity.kmeans_assign(df, k=3, iters=1).collect()
+    }
+
+    def norm(v):
+        acc = 0.0
+        for x in v:
+            acc += x * x
+        return math.sqrt(acc)
+
+    raw = []
+    for a, va in rows:
+        for b, vb in rows:
+            if a < b and cells[a] == cells[b]:
+                dot = 0.0
+                for x, y in zip(va, vb):
+                    dot += x * y
+                raw.append((a, b, dot / (norm(va) * norm(vb))))
+    want = sorted(
+        tuple(r)
+        for r in spark.createDataFrame(raw, "a long, b long, cos double")
+        .select("a", "b", F.round("cos", 4).alias("cos"))
+        .filter(F.col("cos") >= 0.6)
+        .collect()
+    )
+    assert got == want
+    assert len(got) > 0  # the comparison must be load-bearing
 
 
 def test_semdedup_no_cartesian(spark):

@@ -894,12 +894,32 @@ def test_pq_adc_equals_reconstructed_distance(spark):
         assert abs(r["adist"] - round(expect, 4)) <= 1e-9, (q, n)
 
 
+def _py_pq_codes(subvectors, book):
+    """Pure-Python nearest-codebook reference: squared differences
+    accumulate in ascending dimension order in float64, codes scan
+    ascending with a strict < (ties keep the lowest code), and a NULL
+    or wrong-length subvector is +inf everywhere (lowest code)."""
+
+    out = {}
+    for key, sub, sv in subvectors:
+        entries = sorted(book[sub])
+        best_d, best_c = float("inf"), entries[0][0]
+        for code, cv in entries:
+            d = float("inf")
+            if sv is not None and len(sv) == len(cv):
+                d = 0.0
+                for x, y in zip(sv, cv):
+                    d += (x - y) * (x - y)
+            if d < best_d:
+                best_d, best_c = d, code
+        out[key] = best_c
+    return out
+
+
 def test_pq_assign_numpy_and_jvm_engines_agree(spark):
-    # The Arrow-batched numpy argmin accumulates squared differences
-    # dim-ascending (the zip_with/aggregate fold's exact order) and
-    # scans codes ascending with a strict <, so codebooks, encodings,
-    # and the final top-k must be identical to the JVM scored-join
-    # path (forced here by stubbing the numpy engine out).
+    # The Arrow-batched argmin must encode exactly as the pure-Python
+    # reference above, on refined codebooks and on the edge rows
+    # (duplicate codes tie, NULL and short subvectors).
     import random
 
     rng = random.Random(11)
@@ -907,25 +927,47 @@ def test_pq_assign_numpy_and_jvm_engines_agree(spark):
         (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(50)
     ]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    got_np = sorted(
-        tuple(r)
-        for r in similarity.pq_topk(
-            emb, [0, 1, 2], k=4, m=4, n_codes=8, iters=1, dim=16
-        ).collect()
+    books = similarity.pq_codebooks(emb, m=4, n_codes=8, iters=1, dim=16)
+    book: dict = {}
+    for r in books.collect():
+        book.setdefault(r["sub"], []).append((r["code"], list(r["cv"])))
+    got = {
+        (r["vec_id"], r["sub"]): r["code"]
+        for r in similarity.pq_encode(emb, books, m=4, dim=16).collect()
+    }
+    want = _py_pq_codes(
+        [
+            ((vid, sub), sub, v[sub * 4:(sub + 1) * 4])
+            for vid, v in rows
+            for sub in range(4)
+        ],
+        book,
     )
-    real = similarity._numpy_pq_assign
-    similarity._numpy_pq_assign = lambda *a, **k: None
-    try:
-        got_jvm = sorted(
-            tuple(r)
-            for r in similarity.pq_topk(
-                emb, [0, 1, 2], k=4, m=4, n_codes=8, iters=1, dim=16
-            ).collect()
-        )
-    finally:
-        similarity._numpy_pq_assign = real
-    assert got_np == got_jvm
-    assert len(got_np) == 12
+    assert got == want
+    assert len(set(got.values())) > 1  # the comparison must be load-bearing
+
+    edge_book = {0: [(5, [1.0, 0.0]), (3, [1.0, 0.0]), (9, [0.0, 1.0])]}
+    edge_rows = [
+        (0, 0, [2.0, 0.0]),   # ties codes 3 and 5 -> 3
+        (1, 0, [0.1, 0.9]),   # clear winner 9
+        (2, 0, None),         # NULL -> lowest code
+        (3, 0, [0.0]),        # short -> lowest code
+    ]
+    sv = spark.createDataFrame(edge_rows, "vid long, sub int, sv array<double>")
+    books_df = spark.createDataFrame(
+        [(0, c, cv) for c, cv in edge_book[0]],
+        "sub int, code long, cv array<double>",
+    )
+    got_edge = {
+        r["vid"]: r["code"] for r in similarity._pq_assign(sv, books_df).collect()
+    }
+    assert got_edge == _py_pq_codes(edge_rows, edge_book)
+    assert got_edge == {0: 3, 1: 9, 2: 3, 3: 3}
+
+    got_topk = similarity.pq_topk(
+        emb, [0, 1, 2], k=4, m=4, n_codes=8, iters=1, dim=16
+    ).collect()
+    assert len(got_topk) == 12
 
 
 def test_pq_compression_shape_and_validation(spark):

@@ -496,94 +496,151 @@ def test_hll_registers_aggregate_partially(spark):
     assert "Sort [" not in phys, phys
 
 
+def _py_assign(vectors, cents):
+    """Pure-Python argmax-cosine reference for the assignment kernel:
+    {vec_id: (cell, score)}. The SQL NULL algebra, spelled out:
+    float64 dots and norms accumulate in ascending dimension order; a
+    NULL or short vector or centroid, or a zero norm, leaves the
+    cosine undefined and it scores -inf; cells scan ascending with a
+    strict >, so ties keep the lowest cell id."""
+
+    import math
+
+    cents = sorted(cents)
+    dim = next((len(cv) for _, cv in cents if cv is not None), 0)
+
+    def usable(x):
+        return x is not None and len(x) >= dim
+
+    def norm(x):
+        acc = 0.0
+        for i in range(dim):
+            acc += float(x[i]) * float(x[i])
+        return math.sqrt(acc)
+
+    out = {}
+    for vid, v in vectors:
+        best_s, best_c = float("-inf"), cents[0][0]
+        for cell, cv in cents:
+            s = float("-inf")
+            if usable(v) and usable(cv):
+                dot = 0.0
+                for i in range(dim):
+                    dot += float(v[i]) * float(cv[i])
+                den = norm(v) * norm(cv)
+                if den != 0.0:
+                    s = dot / den
+            if s > best_s:
+                best_s, best_c = s, cell
+        out[vid] = (best_c, best_s)
+    return out
+
+
 def test_numpy_assign_edge_semantics_match_jvm(spark):
-    """The corners where the numpy argmax could silently diverge from
-    the SQL NULL algebra: exact cosine TIES (duplicate centroids must
-    resolve to the LOWEST cell id), zero-norm vectors (undefined
-    cosine everywhere -> lowest cell id), NULL vectors, and
-    shorter-than-dim vectors (poisoned dot -> lowest cell id). Both
-    engines must agree row for row."""
+    """The corners where the argmax kernel could silently diverge from
+    the SQL NULL algebra, pinned against the pure-Python reference
+    above: exact cosine TIES (duplicate centroids must resolve to the
+    LOWEST cell id), zero-norm vectors, NULL vectors, a NULL seed
+    centroid above the lowest id, shorter-than-dim vectors, and an
+    empty centroid table. Cells and winning cosines must agree row
+    for row."""
 
     from declarative_dataflow_spark.operators import similarity
 
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),   # seed centroid 0
-        (1, [1.0, 0.0, 0.0, 0.0]),   # seed centroid 1 == centroid 0: tie
-        (2, [0.0, 1.0, 0.0, 0.0]),   # seed centroid 2
-        (3, [2.0, 0.0, 0.0, 0.0]),   # ties between cells 0 and 1
-        (4, [0.0, 0.0, 0.0, 0.0]),   # zero norm -> lowest cell
-        (5, None),                   # NULL vector -> lowest cell
-        (7, [0.0, 3.0, 0.1, 0.0]),   # clear cell-2 winner
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # 3 centroids x 4 dims = 12 terms routes _assign_cells to the
-    # literal-unroll JVM path, so calling the numpy engine directly
-    # and _assign_cells with numpy stubbed compares the two
-    # independent implementations on identical centroids.
-    cents = similarity._seed_centroids(emb, 3, "vec_id", "embedding")
-    rows_c = sorted(cents.collect(), key=lambda r: r["cell"])
-    np_df = similarity._numpy_assign_cells(emb, rows_c, "vec_id", "embedding", 4)
-    got_np = {r["vec_id"]: r["cell"] for r in np_df.collect()}
-    real = similarity._numpy_assign_cells
-    similarity._numpy_assign_cells = lambda *a, **k: None
-    try:
-        jvm_df = similarity._assign_cells(emb, cents, "vec_id", "embedding")
-        # force the broadcast path regardless of term count by calling
-        # through _assign_cells with the numpy engine stubbed: 3x4=12
-        # terms routes to the literal unroll, which is ALSO a JVM
-        # reference implementation -- compare against both.
-        got_lit = {r["vec_id"]: r["cell"] for r in jvm_df.collect()}
-    finally:
-        similarity._numpy_assign_cells = real
-    assert got_np == got_lit
-    # the reasoned outcomes, pinned explicitly
-    assert got_np[3] == 0        # tie between duplicate centroids -> 0
-    assert got_np[4] == 0        # zero norm -> lowest cell id
-    assert got_np[5] == 0        # NULL vector -> lowest cell id
-    assert got_np[7] == 2        # clear winner
+    def check(rows, n_cents):
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        cents = similarity._seed_centroids(emb, n_cents, "vec_id", "embedding")
+        want = _py_assign(rows, [(r["cell"], r["cv"]) for r in cents.collect()])
+        got = {
+            r["vec_id"]: (r["cell"], r["csim"])
+            for r in similarity._assign_cells(
+                emb, cents, "vec_id", "embedding", with_sim=True
+            ).collect()
+        }
+        assert got == want
+        return {k: c for k, (c, _) in got.items()}
 
-    # Shorter-than-dim vectors: the JVM literal unroll RAISES under
-    # Spark 4's ANSI mode (INVALID_ARRAY_INDEX on v[i]); the numpy
-    # engine is strictly more tolerant — the row scores -inf
-    # everywhere and lands in the lowest cell. Pin the numpy behavior
-    # (the JVM contract for ragged corpora is "an error", so there is
-    # no value-parity to assert).
-    ragged = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.5, 0.5]), (2, [0.0, 1.0, 0.0, 0.0])],
-        "vec_id long, embedding array<double>",
+    got = check(
+        [
+            (0, [1.0, 0.0, 0.0, 0.0]),   # seed centroid 0
+            (1, [1.0, 0.0, 0.0, 0.0]),   # seed centroid 1 == centroid 0: tie
+            (2, [0.0, 1.0, 0.0, 0.0]),   # seed centroid 2
+            (3, [2.0, 0.0, 0.0, 0.0]),   # ties between cells 0 and 1
+            (4, [0.0, 0.0, 0.0, 0.0]),   # zero norm -> lowest cell
+            (5, None),                   # NULL vector -> lowest cell
+            (7, [0.0, 3.0, 0.1, 0.0]),   # clear cell-2 winner
+        ],
+        3,
     )
-    rc = sorted(
-        similarity._seed_centroids(ragged, 1, "vec_id", "embedding").collect(),
-        key=lambda r: r["cell"],
-    )
-    got_ragged = {
+    # the reasoned outcomes, pinned explicitly
+    assert got[3] == 0        # tie between duplicate centroids -> 0
+    assert got[4] == 0        # zero norm -> lowest cell id
+    assert got[5] == 0        # NULL vector -> lowest cell id
+    assert got[7] == 2        # clear winner
+
+    # A NULL seed centroid above the lowest id scores -inf for every
+    # row; k-means over it must run, not raise.
+    null_seed = [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0]), (3, [0.9, 0.1])]
+    assert check(null_seed, 3) == {0: 0, 1: 0, 2: 2, 3: 0}
+    emb = spark.createDataFrame(null_seed, "vec_id long, embedding array<double>")
+    refined = [
+        (r["cell"], r["cv"])
+        for r in similarity.ivf_centroids(emb, n_centroids=3, iters=1).collect()
+    ]
+    assert dict(refined)[1] is None  # captured nothing, stays NULL
+    want = {k: c for k, (c, _) in _py_assign(null_seed, refined).items()}
+    got_km = {
         r["vec_id"]: r["cell"]
-        for r in similarity._numpy_assign_cells(
-            ragged, rc, "vec_id", "embedding", 4
-        ).collect()
+        for r in similarity.kmeans_assign(emb, k=3, iters=1).collect()
     }
-    assert got_ragged[1] == rc[0]["cell"]
+    assert got_km == want
+
+    # Shorter-than-dim vectors score -inf everywhere and land in the
+    # lowest cell.
+    got = check(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.5, 0.5]), (2, [0.0, 1.0, 0.0, 0.0])],
+        1,
+    )
+    assert got[1] == 0
+
+    # An empty centroid table assigns nothing.
+    none = spark.createDataFrame([], "cell long, cv array<double>")
+    assert similarity._assign_cells(emb, none, "vec_id", "embedding").count() == 0
+
+
+def test_assign_cells_bounds_centroid_collect(spark):
+    """A centroid frame past the 65,536-row driver bound raises BEFORE
+    it is collected whole: a limit-bounded collect, not a full one."""
+
+    import time
+
+    from pyspark.sql import functions as F
+
+    from declarative_dataflow_spark.operators import similarity
+
+    emb = spark.createDataFrame([(0, [1.0])], "vec_id long, embedding array<double>")
+    cents = spark.range(10_000_000).select(
+        F.col("id").alias("cell"), F.array(F.lit(1.0)).alias("cv")
+    )
+    t0 = time.monotonic()
+    with pytest.raises(ValueError, match="centroid"):
+        similarity._assign_cells(emb, cents, "vec_id", "embedding")
+    assert time.monotonic() - t0 < 60
 
 
 def test_cell_assignment_combines_before_exchange(spark):
-    """The k-means/IVF cell assignment must rank with an aggregate
-    struct-max, never a window: the partial max combines the n x k
-    scored expansion down to one skinny (vec_id, cell) row per vector
-    BEFORE the single shuffle exchange (the old form shuffled the full
-    expansion — corpus x k x dim bytes — and ranked it with a vec_id
-    window). Any Sort left is the local pre-aggregation run sort
-    inside SortAggregate (struct-max has no mutable hash buffer), not
-    a post-shuffle ranking."""
+    """The k-means/IVF cell assignment must never rank: the argmax
+    kernel scores every vector against the broadcast centroids inside
+    one map-side pass, so the plan carries no window, no join and no
+    hash shuffle of the n x k scored expansion."""
 
     from declarative_dataflow_spark.operators import similarity
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
-    # Small k, preferred engine (r11: the Arrow-batched numpy argmax
-    # at EVERY shape — fresh centroid literals defeat the codegen
-    # cache per Lloyd pass): MAP-ONLY — no window, no join, no hash
-    # shuffle; the only permissible Exchange is the
-    # under-parallelized-input round-robin widening.
+    # Small k: MAP-ONLY — no window, no join, no hash shuffle; the
+    # only permissible Exchange is the under-parallelized-input
+    # round-robin widening.
     cents = similarity.ivf_centroids(emb, n_centroids=4, iters=0)
     df = similarity._assign_cells(emb, cents, "vec_id", "embedding")
     phys = _executed(df).split("== Initial Plan ==")[0]
@@ -592,21 +649,8 @@ def test_cell_assignment_combines_before_exchange(spark):
     assert "Exchange hashpartitioning" not in phys, phys
     assert "CartesianProduct" not in phys, phys
 
-    # Small k, JVM literal-unroll fallback (numpy unavailable): a pure
-    # per-row Project — NO exchange, no window, no join at all.
-    real_small = similarity._numpy_assign_cells
-    similarity._numpy_assign_cells = lambda *a, **k: None
-    try:
-        udf_ = similarity._assign_cells(emb, cents, "vec_id", "embedding")
-        uphys = _executed(udf_).split("== Initial Plan ==")[0]
-    finally:
-        similarity._numpy_assign_cells = real_small
-    assert "Window" not in uphys, uphys
-    assert "Exchange" not in uphys, uphys
-    assert "CartesianProduct" not in uphys, uphys
-
-    # Large k (k*dim past the budget): the Arrow-batched numpy argmax
-    # is MAP-ONLY — no window, no join, no hash shuffle at all (the
+    # Large k (k*dim past a literal unroll's codegen budget): still
+    # MAP-ONLY — no window, no join, no hash shuffle at all (the
     # only permissible Exchange is the under-parallelized-input
     # round-robin widening).
     big = spark.createDataFrame(
@@ -623,25 +667,6 @@ def test_cell_assignment_combines_before_exchange(spark):
     assert "Window" not in bphys, bphys
     assert "Exchange hashpartitioning" not in bphys, bphys
     assert "CartesianProduct" not in bphys, bphys
-
-    # JVM fallback (numpy unavailable): broadcast-scored expansion,
-    # argmax pre-reduced by a partial max BEFORE the one exchange.
-    real = similarity._numpy_assign_cells
-    similarity._numpy_assign_cells = lambda *a, **k: None
-    try:
-        jdf = similarity._assign_cells(big, bcents, "vec_id", "embedding")
-        jphys = _executed(jdf).split("== Initial Plan ==")[0]
-    finally:
-        similarity._numpy_assign_cells = real
-    assert "Window" not in jphys, jphys
-    assert "partial_max" in jphys, jphys  # map-side combine
-    assert jphys.count("Exchange hashpartitioning") == 1, jphys
-    assert "Exchange hashpartitioning(vec_id" in jphys, jphys
-    assert "CartesianProduct" not in jphys, jphys
-    # both engines produce the same assignment
-    got_np = {(r["vec_id"], r["cell"]) for r in bdf.collect()}
-    got_jvm = {(r["vec_id"], r["cell"]) for r in jdf.collect()}
-    assert got_np == got_jvm
 
 
 def test_corpus_profile_is_one_pass(spark):
@@ -785,7 +810,8 @@ def test_tpch_q21_large_form_single_pairs_chain(spark, monkeypatch):
     default form's rows, and (b) compile the late-pairs chain ONCE —
     the o-partitioned window count replaces the duplicated
     scan+join+aggregate, so the executed plan carries one fewer
-    lineitem scan and a Window node."""
+    lineitem scan and a Window node. A malformed value falls back to
+    the default threshold."""
 
     import __spark_entry__ as entry_mod
 
@@ -806,3 +832,10 @@ def test_tpch_q21_large_form_single_pairs_chain(spark, monkeypatch):
     large_scans = phys.count("lineitem.parquet")
     assert large_scans < small_scans, (large_scans, small_scans)
     assert "CartesianProduct" not in phys
+
+    # A malformed override is ignored: the 1 GiB default keeps the
+    # default form instead of failing the query build.
+    monkeypatch.setenv("SPARK_GRAFT_Q21_LARGE_BYTES", "1GiB")
+    bad = entry_mod.queries()["tpch_q21"](spark, sf)
+    assert _executed(bad).count("lineitem.parquet") == small_scans
+    assert sorted(tuple(r) for r in bad.collect()) == small_rows

@@ -219,6 +219,63 @@ def test_aggregate_rule_incremental(engine):
     assert +acc == Counter({("a", 15): 1, ("b", 7): 1})
 
 
+def test_aggregate_wire_integer_variables(engine):
+    """A reference-shaped JSON Aggregate over a Hector uses INTEGER
+    variables; it must still take the incremental path, and its diffs
+    must equal the recompute path's in every epoch."""
+
+    from declarative_dataflow_spark.plan.wire import plan_from_dict
+    from declarative_dataflow_spark.streaming.incremental import (
+        IncrementalAggregate,
+    )
+
+    for a in ("grp", "amt"):
+        engine.create_attribute(a)
+    engine.transact(
+        [
+            Datom.add(1, "grp", "a"),
+            Datom.add(1, "amt", 5),
+            Datom.add(2, "grp", "b"),
+            Datom.add(2, "amt", 7),
+        ]
+    )
+    doc = {
+        "Aggregate": {
+            "variables": [0, 1],
+            "plan": {
+                "Hector": {
+                    "variables": [0, 1, 2],
+                    "bindings": [
+                        {"Attribute": {"variables": [2, 0], "source_attribute": "grp"}},
+                        {"Attribute": {"variables": [2, 1], "source_attribute": "amt"}},
+                    ],
+                }
+            },
+            "aggregation_fns": ["SUM"],
+            "key_variables": [0],
+            "aggregation_variables": [1],
+            "with_variables": [2],
+        }
+    }
+    engine.register("inc", plan_from_dict(doc))
+    engine.register("rec", plan_from_dict(doc))
+    session = ReactiveSession(engine)
+    session.interest("inc")
+    session.interest("rec", incremental=False)
+    assert isinstance(session.interests["inc"].delta_join, IncrementalAggregate)
+
+    session.advance()
+    session.transact([Datom.add(3, "grp", "a"), Datom.add(3, "amt", 10)])
+    session.transact([Datom.retract(2, "amt", 7)])
+    for epoch in range(3):
+        inc = _diffs(session.interests["inc"].history, epoch)
+        assert inc == _diffs(session.interests["rec"].history, epoch)
+    assert _diffs(session.interests["inc"].history, 1) == {
+        ("a", 5): -1,
+        ("a", 15): 1,
+    }
+
+
 def test_late_delta_join_no_double_count(engine):
     """A DeltaJoin seeded during the same advance (attribute appeared
     after subscription, engine.transact already ran) must not replay

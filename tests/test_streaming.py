@@ -2197,6 +2197,51 @@ def test_stream_fuzzy_dedup_cross_batch(spark, tmp_path):
     assert k2 == [11]
 
 
+@pytest.mark.parametrize("corrupt", ["bad_footer", "no_data_files"])
+@pytest.mark.parametrize("kind", ["near", "sem", "fuzzy"])
+def test_stream_dedup_corrupt_state_raises(spark, tmp_path, kind, corrupt):
+    """Only a state dir that does not exist yet reads as "no state": a
+    corrupt one must raise, so foreachBatch retries the micro-batch
+    instead of deduping it against nothing and admitting duplicates
+    into the accepted set for good. Covers both a Spark read failure
+    and an AnalysisException other than PATH_NOT_FOUND."""
+
+    from declarative_dataflow_spark.operators import similarity
+    from declarative_dataflow_spark.streaming.curation import (
+        StreamFuzzyDedup,
+        StreamNearDedup,
+        StreamSemDeDup,
+    )
+
+    state = tmp_path / "state"
+    state.mkdir()
+    if corrupt == "bad_footer":
+        (state / "part-00000.parquet").write_bytes(b"not a parquet file")
+    else:
+        (state / "_SUCCESS").write_bytes(b"")
+    if kind == "near":
+        stream = StreamNearDedup(spark, str(state))
+        batch = spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog")],
+            "doc_id long, text string",
+        )
+    elif kind == "sem":
+        emb = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+            "vec_id long, embedding array<double>",
+        )
+        stream = StreamSemDeDup(
+            spark, str(state), similarity.ivf_centroids(emb, 2, iters=0)
+        )
+        batch = emb
+    else:
+        stream = StreamFuzzyDedup(spark, str(state))
+        batch = spark.createDataFrame([(1, "widget")], "id long, s string")
+    with pytest.raises(Exception) as exc:
+        stream.process_batch(batch, epoch=0).collect()
+    assert "PATH_NOT_FOUND" not in str(exc.value)
+
+
 def test_stream_fuzzy_dedup_retry_idempotent(spark, tmp_path):
     """A RETRIED epoch must not dedup against its own prior state
     contribution (epoch-keyed overwrite)."""

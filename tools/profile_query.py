@@ -1,10 +1,10 @@
-"""Round-12 optimization profiler: isolated per-query measurement.
+"""Isolated per-query profiler for declared queries.
 
 Usage:
-    python tools/profile_r12.py <query> [query ...] [--sf DIR] [--plans SUFFIX]
+    python tools/profile_query.py <query> [query ...] [--sf DIR] [--plans SUFFIX]
 
 For each named query (a key of __spark_entry__.queries()):
-  - captures .explain("formatted") to plans/r12/<query>_<SUFFIX>.txt
+  - captures .explain("formatted") to plans/<query>_<SUFFIX>.txt
     when --plans is given (e.g. --plans before / --plans after)
   - times the query with the bench's own action (.count()) min-of-2
     after one untimed warmup of the host probe, and with the noop
@@ -43,7 +43,7 @@ def main() -> None:
     os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from declarative_dataflow_spark.session import build_session
 
-    spark = build_session("profile_r12")
+    spark = build_session("profile")
     import bench
     import __spark_entry__ as entry_mod
 
@@ -56,14 +56,14 @@ def main() -> None:
     probe = bench.host_speed_probe(spark)
     print(json.dumps({"host_probe": probe, "sf_dir": sf_dir}), flush=True)
 
-    plans_dir = os.path.join("plans", "r12")
+    plans_dir = "plans"
     os.makedirs(plans_dir, exist_ok=True)
 
     for name in names:
         if name not in qs:
             print(json.dumps({"query": name, "error": "unknown"}), flush=True)
             continue
-        spark.sparkContext.setJobDescription(f"r12-profile:{name}")
+        spark.sparkContext.setJobDescription(f"profile:{name}")
         if plans_suffix:
             df = qs[name](spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
