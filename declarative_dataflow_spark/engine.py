@@ -29,9 +29,22 @@ import tempfile
 import dataclasses
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import Any, Iterable, Optional
+from typing import Any, Callable, Iterable, Optional
 
+import pyarrow as pa
+from pyspark.errors import PySparkValueError
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StringType,
+    StructType,
+    _has_nulltype,
+    _infer_schema,
+    _merge_type,
+)
 from pyspark.sql.window import Window
 
 from .plan.compiler import (
@@ -251,18 +264,127 @@ class Rule:
     plan: Plan
 
 
+# -- driver-held rows as DataFrames -----------------------------------------
+
+
+def infer_schema(
+    rows: Iterable[tuple],
+    names: list[str],
+    schema: Optional[StructType] = None,
+) -> Optional[StructType]:
+    """``schema`` widened by pyspark's own per-row inference over
+    ``rows``: the inference ``createDataFrame`` runs over a row list,
+    folded with ``_merge_type``, so it can be carried batch by batch
+    instead of re-run over every row. A column that has only held NULL
+    stays ``NullType``. Raises ``PySparkTypeError`` on types that
+    cannot merge (long vs double); returns None for no rows and no
+    schema."""
+
+    for row in rows:
+        inferred = _infer_schema(row, names)
+        schema = inferred if schema is None else _merge_type(schema, inferred)
+    return schema
+
+
+def _to_string(v: Any) -> str:
+    if isinstance(v, str):
+        return v
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    return str(v)
+
+
+def _conformer(dt: DataType) -> Optional[Callable[[Any], Any]]:
+    """Converter of a non-NULL value to ``dt``, None when values need
+    none. Mirrors ``createDataFrame`` over a row list: an atomic value
+    in a column merged to string becomes ``str(v)`` (booleans
+    lowercase), and structs (tuples), arrays and maps convert
+    element-wise."""
+
+    def apply(conv, v):
+        return v if conv is None or v is None else conv(v)
+
+    if isinstance(dt, StringType):
+        return _to_string
+    if isinstance(dt, StructType):
+        convs = [_conformer(f.dataType) for f in dt.fields]
+        if any(convs):
+            return lambda v: tuple(apply(c, x) for c, x in zip(convs, v))
+    elif isinstance(dt, ArrayType):
+        conv = _conformer(dt.elementType)
+        if conv is not None:
+            return lambda v: [apply(conv, x) for x in v]
+    elif isinstance(dt, MapType):
+        kc, vc = _conformer(dt.keyType), _conformer(dt.valueType)
+        if kc is not None or vc is not None:
+            return lambda v: {apply(kc, k): apply(vc, x) for k, x in v.items()}
+    return None
+
+
+def conform_rows(rows: list[tuple], schema: StructType) -> list[tuple]:
+    """``rows`` with every value converted to its column's type in
+    ``schema`` (see ``_conformer``); the same list when none needs it."""
+
+    convs = [_conformer(f.dataType) for f in schema.fields]
+    if not any(convs):
+        return rows
+    return [
+        tuple(x if c is None or x is None else c(x) for c, x in zip(convs, r))
+        for r in rows
+    ]
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType
+) -> DataFrame:
+    """Driver-held rows as a DataFrame over a ``LocalRelation``: the
+    rows become a ``pyarrow.Table`` typed by ``schema``, which
+    ``createDataFrame`` ships to the JVM as Arrow batches. A plain
+    ``createDataFrame`` over a row list instead plans a Python-RDD
+    scan that starts a Python-worker stage every time it is read. Above
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps
+    the batches in a JVM-side RDD, so no size starts a Python worker.
+
+    ``rows`` must conform to ``schema`` (``conform_rows``); pyarrow
+    rejects a value of another type. A ``NullType`` column (one that
+    only ever held NULL) raises ``CANNOT_DETERMINE_TYPE``, as
+    ``createDataFrame`` does when inference finds no type."""
+
+    if _has_nulltype(schema):
+        raise PySparkValueError(
+            errorClass="CANNOT_DETERMINE_TYPE", messageParameters={}
+        )
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 class _TransactedAttribute:
     """Accumulates datom batches for one attribute.
 
     Recent rows live in a driver-side list (cheap for the protocol /
-    test path); once the list passes ``SPILL_ROWS`` it is flushed to a
-    parquet spill directory and read back as an ordinary scan, so a
-    long-lived attribute's history is bounded on the driver by one
-    spill threshold regardless of total volume (the streaming
+    test path) and are read as an Arrow ``LocalRelation``
+    (``local_frame``), so scanning them starts no Python worker. Once
+    the list passes ``SPILL_ROWS`` it is flushed to a parquet spill
+    directory and read back as an ordinary scan, so a long-lived
+    attribute's history is bounded on the driver by one spill
+    threshold regardless of total volume (the streaming
     ``transact_frame`` path never touches the driver at all).
+
+    Column types are those ``createDataFrame`` would infer over every
+    row ever appended, but carried incrementally: each batch widens
+    ``schema`` once (``widen``) and the held rows are kept conformed to
+    it, so reading the attribute never re-infers. Compaction does not
+    narrow the type. CompareAndSwap attributes use their explicit
+    struct schema instead.
     """
 
     SPILL_ROWS = 250_000
+    _NAMES = ["e", "v", "t", "diff", "__seq"]
     _SCHEMA = "e long, v string, t long, diff long, __seq long"
 
     def __init__(self, spark: SparkSession, config: AttributeConfig):
@@ -276,11 +398,34 @@ class _TransactedAttribute:
         self._cached: Optional[DataFrame] = None
         self._spill_dir: Optional[str] = None
         self._spill_version = 0
+        self._cas = config.input_semantics == InputSemantics.COMPARE_AND_SWAP
+        self.schema: Optional[StructType] = (
+            StructType.fromDDL(self._cas_schema()) if self._cas else None
+        )
 
-    def append(self, rows: Iterable[tuple]) -> None:
-        for r in rows:
-            self.rows.append((*r, self._seq))
-            self._seq += 1
+    def widen(self, rows: list[tuple]) -> Optional[StructType]:
+        """The schema after appending ``rows`` (e, v, t, diff); raises,
+        without mutating anything, when a value type cannot merge."""
+
+        if self._cas:
+            return self.schema
+        return infer_schema(
+            ((*r, self._seq) for r in rows), self._NAMES, self.schema
+        )
+
+    def append(self, rows: list[tuple], schema: Optional[StructType]) -> None:
+        """Append (e, v, t, diff) rows; ``schema`` is ``widen(rows)``."""
+
+        seq = self._seq
+        new = [(*r, seq + i) for i, r in enumerate(rows)]
+        if not self._cas:
+            # CAS values must already match their explicit struct type.
+            if schema != self.schema:
+                self.rows = conform_rows(self.rows, schema)
+                self.schema = schema
+            new = conform_rows(new, schema)
+        self.rows.extend(new)
+        self._seq = seq + len(new)
         self._cached = None
         if len(self.rows) >= self.SPILL_ROWS:
             self._flush()
@@ -292,28 +437,18 @@ class _TransactedAttribute:
             self._spill_dir = tempfile.mkdtemp(prefix="ddspark_attr_")
         return os.path.join(self._spill_dir, f"v{self._spill_version}")
 
-    def _schema(self) -> Optional[str]:
-        """Explicit schema for CAS attributes (a struct value with an
-        all-NULL field defeats inference); None = infer from data."""
+    def _cas_schema(self) -> str:
+        """Explicit schema of CAS attributes (a struct value with an
+        all-NULL field defeats inference)."""
 
-        if self.config.input_semantics == InputSemantics.COMPARE_AND_SWAP:
-            vt = self.config.cas_value_type
-            return (
-                f"e long, v struct<old:{vt},new:{vt}>, "
-                "t long, diff long, __seq long"
-            )
-        return None
+        vt = self.config.cas_value_type
+        return (
+            f"e long, v struct<old:{vt},new:{vt}>, "
+            "t long, diff long, __seq long"
+        )
 
     def _heap_df(self) -> DataFrame:
-        # Types are inferred from the data (values may be ints for
-        # entity refs, strings for scalars — consistent per attribute)
-        # except for CAS ops, whose struct schema is explicit.
-        schema = self._schema()
-        if schema is not None:
-            return self.spark.createDataFrame(self.rows, schema=schema)
-        return self.spark.createDataFrame(self.rows).toDF(
-            "e", "v", "t", "diff", "__seq"
-        )
+        return local_frame(self.spark, self.rows, self.schema)
 
     def _flush(self) -> None:
         """Move the driver-held rows into the parquet spill tier."""
@@ -333,9 +468,10 @@ class _TransactedAttribute:
         if self.rows:
             pieces.append(self._heap_df())
         if not pieces:
-            return self.spark.createDataFrame(
-                [], schema=self._schema() or self._SCHEMA
+            schema = (
+                self.schema if self._cas else StructType.fromDDL(self._SCHEMA)
             )
+            return local_frame(self.spark, [], schema)
         out = pieces[0]
         for p in pieces[1:]:
             out = out.unionByName(p)
@@ -813,13 +949,17 @@ class Engine:
             t = d.t if d.t is not None else tx
             by_attr.setdefault(d.a, []).append((d.e, d.v, t, d.diff))
         # Transactions are atomic: validate every referenced attribute
-        # before mutating any, so a failed transact leaves no partial
-        # state behind.
+        # and merge every batch's value types before mutating any, so a
+        # failed transact leaves no partial state behind.
         unknown = [aid for aid in by_attr if aid not in self._transacted]
         if unknown:
             raise KeyError(f"attribute {unknown[0]} not created")
+        schemas = {
+            aid: self._transacted[aid].widen(rows)
+            for aid, rows in by_attr.items()
+        }
         for aid, rows in by_attr.items():
-            self._transacted[aid].append(rows)
+            self._transacted[aid].append(rows, schemas[aid])
         self.next_tx = tx + 1
         return tx
 

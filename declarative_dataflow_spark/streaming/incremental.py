@@ -17,9 +17,11 @@ as a Catalyst join chain (each pipeline compiles through the ordinary
 Hector compiler against a catalog of versioned snapshots), union the
 pipelines, and consolidate. Work per epoch is proportional to the
 CHANGE, not the accumulated state: every pipeline starts from a delta
-that Catalyst broadcasts when small. Snapshots are localCheckpoint-ed
-DataFrames (swap for Delta tables at cluster scale); lineage is
-truncated every epoch.
+consolidated on the driver and shipped as an Arrow LocalRelation
+(engine.local_frame), which Catalyst broadcasts without a checkpoint
+job. Snapshots append deltas lazily and are consolidated and
+localCheckpoint-ed every ``compact_every`` epochs (swap for Delta
+tables at cluster scale).
 
 Weighted multisets come for free: delta joins multiply ``diff``
 columns, so retractions (diff < 0) propagate through every pipeline
@@ -31,8 +33,9 @@ from __future__ import annotations
 from typing import Any, Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..engine import Datom
+from ..engine import Datom, conform_rows, infer_schema, local_frame
 from ..plan.compiler import (
     DIFF,
     AttributeSource,
@@ -48,6 +51,24 @@ from ..plan.plans import (
     Binding,
     Hector,
 )
+
+
+def _delta_frame(
+    spark: SparkSession, rows: list[tuple[Any, Any, int]]
+) -> Optional[DataFrame]:
+    """One attribute's (e, v, diff) datoms as a consolidated delta, or
+    None when they net to nothing. The batch is driver-held already, so
+    the net weight per (e, v) is summed here, over values typed as
+    ``createDataFrame`` would type the batch, and the result is an Arrow
+    ``LocalRelation`` (``local_frame``): every pipeline reads it
+    without a Python-worker stage or a checkpoint job."""
+
+    schema = infer_schema(rows, ["e", "v", "diff"])
+    net: dict[tuple[Any, Any], int] = {}
+    for e, v, d in conform_rows(rows, schema):
+        net[(e, v)] = net.get((e, v), 0) + d
+    out = [(e, v, d) for (e, v), d in net.items() if d]
+    return local_frame(spark, out, schema) if out else None
 
 
 class SemanticsDeltaSource:
@@ -85,12 +106,12 @@ class SemanticsDeltaSource:
         """Effective-view changes caused by this epoch's datoms (which
         the engine has already transacted into the attribute)."""
 
-        spark = self.prev.sparkSession
-        touched = (
-            spark.createDataFrame([(r[0],) for r in batch_rows])
-            .toDF("e")
-            .distinct()
-            .localCheckpoint(eager=True)
+        keys = [(r[0],) for r in batch_rows]
+        schema = infer_schema(keys, ["e"])
+        touched = local_frame(
+            self.prev.sparkSession,
+            list(dict.fromkeys(conform_rows(keys, schema))),
+            schema,
         )
         hist = self._ta._raw_dataframe().join(touched, "e", "left_semi")
         new_eff = (
@@ -187,11 +208,9 @@ class DeltaJoin:
                 if not eff.limit(1).isEmpty():
                     out[aid] = eff
                 continue
-            # Eagerly materialized: every pipeline references the
-            # delta, so one small checkpoint beats re-evaluating the
-            # consolidation per pipeline.
-            df = self.spark.createDataFrame(rows).toDF("e", "v", "diff")
-            out[aid] = self._consolidate(df).localCheckpoint(eager=True)
+            delta = _delta_frame(self.spark, rows)
+            if delta is not None:
+                out[aid] = delta
         return out
 
     # -- the delta pipelines ---------------------------------------------
@@ -416,10 +435,11 @@ class DeltaJoin:
         self.epoch += 1
 
         if not pipes:
-            schema = ", ".join(
-                [f"`{v}` string" for v in self.variables] + ["diff long"]
+            schema = StructType(
+                [StructField(str(v), StringType()) for v in self.variables]
+                + [StructField("diff", LongType())]
             )
-            return self.spark.createDataFrame([], schema=schema)
+            return local_frame(self.spark, [], schema)
         union = pipes[0]
         for p in pipes[1:]:
             union = union.unionByName(p)
@@ -725,6 +745,44 @@ class IncrementalTopK:
         return removed.unionByName(added)
 
 
+def _nonmonotone_attributes(plan, negated: bool = False) -> set[str]:
+    """Attributes a plan reads in a non-monotone position: inside a
+    Negate or Aggregate, or on an Antijoin's right side. Growing such an
+    attribute can retract derived tuples."""
+
+    from ..plan.plans import (
+        Aggregate,
+        Antijoin,
+        Hector,
+        MatchA,
+        MatchAV,
+        MatchEA,
+        Negate,
+        Plan,
+    )
+
+    if isinstance(plan, Antijoin):
+        return _nonmonotone_attributes(
+            plan.left_plan, negated
+        ) | _nonmonotone_attributes(plan.right_plan, True)
+    negated = negated or isinstance(plan, (Negate, Aggregate))
+    out: set[str] = set()
+    if negated and isinstance(plan, (MatchA, MatchEA, MatchAV)):
+        out.add(plan.attribute)
+    if negated and isinstance(plan, Hector):
+        out |= {
+            b.attribute
+            for b in plan.bindings
+            if isinstance(b, AttributeBinding)
+        }
+    for attr in getattr(plan, "__dataclass_fields__", {}):
+        v = getattr(plan, attr)
+        for child in v if isinstance(v, list) else [v]:
+            if isinstance(child, Plan):
+                out |= _nonmonotone_attributes(child, negated)
+    return out
+
+
 class IncrementalRecursion:
     """Incrementally-maintained monotone recursive rule SYSTEM.
 
@@ -740,8 +798,11 @@ class IncrementalRecursion:
       eval(r over new inputs, cycle:=T) \\ T[r], then propagate
       D_{i+1}[r] = eval(delta step of r) \\ total[r] until every
       rule's delta is empty. Work tracks the delta, not |T|.
-    - retractions: DRed (delete-and-rederive) over the whole cycle.
-      Each T[r] is a fixpoint of the old inputs, so the one-step
+    - retractions, and any change to an attribute read under negation
+      or aggregation (a stratified Antijoin/Negate/Aggregate over a
+      static input; growing it can delete): DRed (delete-and-rederive)
+      over the whole cycle. Each T[r] is a fixpoint of the old inputs,
+      so the one-step
       overdeletion seed is T[r] \\ eval(r over new inputs, cycle:=T);
       the closure then overdeletes tuples derivable only through
       overdeleted tuples of ANY cycle rule (tuples with an intact
@@ -794,6 +855,9 @@ class IncrementalRecursion:
         # LWW/Distinct attributes snapshot their EFFECTIVE view and
         # translate raw batches through a SemanticsDeltaSource.
         self.semantics = dict(semantics or {})
+        self.nonmonotone = set().union(
+            *(_nonmonotone_attributes(p) for p in self.rules.values())
+        )
         self.snapshots: dict[str, DataFrame] = {}
         for aid, df in (initial or {}).items():
             self.snapshots[aid] = (
@@ -815,8 +879,10 @@ class IncrementalRecursion:
     # -- helpers ---------------------------------------------------------
 
     def _empty_df(self, rn: str) -> DataFrame:
-        schema = ", ".join(f"`{c}` string" for c in self.cols[rn])
-        return self.spark.createDataFrame([], schema=schema)
+        schema = StructType(
+            [StructField(c, StringType()) for c in self.cols[rn]]
+        )
+        return local_frame(self.spark, [], schema)
 
     def _views(self) -> dict[str, DataFrame]:
         """Present facts per attribute (net weight > 0, set view)."""
@@ -975,11 +1041,14 @@ class IncrementalRecursion:
                 if not delta.filter(F.col("diff") < 0).limit(1).isEmpty():
                     any_negative = True
             else:
-                delta = DeltaJoin._consolidate(
-                    self.spark.createDataFrame(rows_).toDF("e", "v", "diff")
-                ).localCheckpoint(eager=True)
+                delta = _delta_frame(self.spark, rows_)
+                if delta is None:
+                    continue
                 if any(r[2] < 0 for r in rows_):
                     any_negative = True
+            if aid in self.nonmonotone:
+                # Growing an attribute read under negation deletes too.
+                any_negative = True
             merged = DeltaJoin._consolidate(
                 self.snapshots[aid].unionByName(delta)
             ).localCheckpoint(eager=True)
@@ -1695,7 +1764,7 @@ class IncrementalCC:
         from ..operators.dedup import connected_components
 
         spark = self.edges.sparkSession
-        empty_pairs = spark.createDataFrame([], self.edges.schema)
+        empty_pairs = local_frame(spark, [], self.edges.schema)
         add_e = self._norm(added) if added is not None else empty_pairs
         ret_e = (
             self._norm(retracted) if retracted is not None else empty_pairs

@@ -13,9 +13,11 @@ previous epoch's snapshot with a distributed exceptAll — no
 driver-side relation state. For the streaming-source path the same
 diffing runs inside foreachBatch (see diff_sink).
 
-Scale notes: snapshots are cached DataFrames (swap for Delta tables at
-very large results); re-evaluation cost is one Catalyst job per epoch,
-which AQE sizes to the actual data.
+Scale notes: transacted attributes and per-epoch datom batches reach
+Spark as Arrow LocalRelations built on the driver (engine.local_frame),
+so no epoch starts a Python worker. A recompute snapshot is a cached
+DataFrame (swap for Delta tables at very large results), released only
+after the epoch's diffs, which read it, have been emitted.
 """
 
 from __future__ import annotations
@@ -25,8 +27,9 @@ from dataclasses import dataclass, field
 from typing import Callable, Iterable, Optional
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..engine import Datom, Engine
+from ..engine import Datom, Engine, local_frame
 from .diff_sink import DEFAULT_HISTORY_LIMIT, record_bounded
 
 
@@ -49,6 +52,8 @@ class Interest:
     )
     on_evict: Optional[Callable[[int, list], None]] = None
     delta_join: Optional[object] = None  # incremental path, if eligible
+    # False pins the interest to recompute + exceptAll.
+    incremental: bool = True
     # True when the DeltaJoin was (re)seeded inside the current advance,
     # i.e. AFTER engine.transact — its snapshots already contain this
     # epoch's datoms, so the replay path must not transact them again.
@@ -57,6 +62,9 @@ class Interest:
     # (the reference's delay+coarsen, server/src/main.rs:482-490).
     granularity: int = 1
     pending: list[DataFrame] = field(default_factory=list)
+    # Recompute snapshots superseded this epoch: the emitted diffs read
+    # them, so they stay cached until the diffs have been consumed.
+    retired: list[DataFrame] = field(default_factory=list)
 
 
 def _delta_join_for(engine: Engine, name: str):
@@ -277,6 +285,7 @@ class ReactiveSession:
             history=deque(maxlen=max(1, history_limit)),
             on_evict=on_evict,
             delta_join=dj,
+            incremental=incremental,
             granularity=max(1, granularity),
         )
 
@@ -285,7 +294,11 @@ class ReactiveSession:
         ShutdownHandle, src/server/mod.rs:475-488)."""
 
         sub = self.interests.pop(name, None)
-        if sub is not None and isinstance(sub.previous, DataFrame):
+        if sub is None:
+            return
+        for old in sub.retired:
+            old.unpersist()
+        if isinstance(sub.previous, DataFrame):
             sub.previous.unpersist()
 
     def transact(self, datoms: Iterable[Datom]) -> int:
@@ -300,7 +313,11 @@ class ReactiveSession:
     def advance(self, datoms: Optional[list[Datom]] = None) -> int:
         epoch = self.epoch
         for sub in self.interests.values():
-            if sub.delta_join is None and sub.previous is None:
+            if (
+                sub.incremental
+                and sub.delta_join is None
+                and sub.previous is None
+            ):
                 # Attributes may appear after subscription; until the
                 # first successful epoch, keep probing for the
                 # incremental path. A DeltaJoin built here is seeded
@@ -324,6 +341,9 @@ class ReactiveSession:
                 record_bounded(
                     sub.history, sub.on_evict, epoch, diffs.collect()
                 )
+            for old in sub.retired:
+                old.unpersist()
+            sub.retired = []
         self.epoch += 1
         # The reference advances domain traces as the frontier moves
         # (advance_traces, src/domain/mod.rs:291-341): attributes with
@@ -368,8 +388,8 @@ class ReactiveSession:
             # A rule may reference attributes registered AFTER the
             # subscription (reference: tests/registration_test.rs) —
             # until they exist the result is empty, not an error.
-            schema = "__epoch_diff int"
-            return self.engine.spark.createDataFrame([], schema=schema)
+            schema = StructType([StructField("__epoch_diff", IntegerType())])
+            return local_frame(self.engine.spark, [], schema)
         current.count()
         if sub.previous is None:
             diffs = current.withColumn("__epoch_diff", F.lit(1))
@@ -381,7 +401,6 @@ class ReactiveSession:
                 "__epoch_diff", F.lit(-1)
             )
             diffs = added.unionByName(removed)
-        if sub.previous is not None:
-            sub.previous.unpersist()
+            sub.retired.append(sub.previous)
         sub.previous = current
         return diffs

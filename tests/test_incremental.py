@@ -802,6 +802,57 @@ def test_incremental_stratified_negation_randomized(engine):
     assert acc == expected
 
 
+def test_incremental_recursion_negated_insert_retracts(engine):
+    """An epoch whose only change GROWS the attribute read under
+    negation must still retract the tuples it now blocks: any change to
+    such an attribute can delete, so it runs the DRed phase like a
+    retraction does."""
+
+    from declarative_dataflow_spark import Join, MatchA, NameExpr, Union
+    from declarative_dataflow_spark.plan.plans import Antijoin, Project
+    from declarative_dataflow_spark.streaming.incremental import (
+        IncrementalRecursion,
+    )
+    from declarative_dataflow_spark.streaming.reactive import ReactiveSession
+
+    engine.create_attribute("edge")
+    engine.create_attribute("blocked")
+
+    def not_blocked(p):
+        return Antijoin(
+            ["?y"], p, Project(["?y"], MatchA("?y", "blocked", "?f"))
+        )
+
+    engine.register(
+        "safe_reach",
+        Union(
+            ["?x", "?y"],
+            [
+                not_blocked(MatchA("?x", "edge", "?y")),
+                not_blocked(
+                    Join(
+                        ["?m"],
+                        NameExpr(["?x", "?m"], "safe_reach"),
+                        MatchA("?m", "edge", "?y"),
+                    )
+                ),
+            ],
+        ),
+    )
+    session = ReactiveSession(engine)
+    session.interest("safe_reach")
+    assert isinstance(
+        session.interests["safe_reach"].delta_join, IncrementalRecursion
+    )
+    session.transact([Datom.add(1, "edge", 2), Datom.add(2, "edge", 3)])
+    session.transact([Datom.add(3, "blocked", 1)])
+    acc = _accumulate(session.interests["safe_reach"].history)
+    expected = Counter(
+        {tuple(r): 1 for r in engine.interest("safe_reach").collect()}
+    )
+    assert acc == expected == Counter({(1, 2): 1})
+
+
 def test_delta_join_lww_attribute(engine):
     """Maintained join over a LastWriteWins attribute: a later write
     RETRACTS the previous winner downstream; randomized churn equals

@@ -814,6 +814,50 @@ def test_jaccard_prefix_ceil_integral_product(spark):
     assert plain == filtered and plain
 
 
+def test_jaccard_group_identical_matches_ungrouped(spark):
+    """``group_identical=True`` pairs one representative per identical
+    shingle set and expands the groups back; the pairs and Jaccard
+    values must equal the ungrouped pipeline's. The corpus holds a
+    three-doc identical group (one doc reordered and upper-cased, so
+    the set, not the text, is what matches), a near-duplicate of that
+    group, an identical pair of a second template with its own
+    near-duplicate, and a disjoint doc. Threshold 1.0 keeps exactly
+    the within-group pairs."""
+
+    base = "alpha beta gamma delta epsilon zeta eta theta"
+    other = "one two three four five six"
+    rows = [
+        (0, base),
+        (1, base),
+        (2, "THETA eta zeta epsilon delta gamma beta alpha"),
+        (3, base + " iota"),
+        (4, other),
+        (5, other),
+        (6, "one two three four five seven"),
+        (7, "unrelated words only here"),
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    for t in (0.5, 0.8, 1.0):
+        plain = {
+            (r["a"], r["b"], r["jaccard"])
+            for r in dedup.jaccard_pairs(docs, n=1, threshold=t).collect()
+        }
+        grouped = {
+            (r["a"], r["b"], r["jaccard"])
+            for r in dedup.jaccard_pairs(
+                docs, n=1, threshold=t, group_identical=True
+            ).collect()
+        }
+        assert grouped == plain, t
+    assert {(a, b) for a, b, _ in plain} == {(0, 1), (0, 2), (1, 2), (4, 5)}
+    low = {
+        (r["a"], r["b"])
+        for r in dedup.jaccard_pairs(docs, n=1, threshold=0.5).collect()
+    }
+    assert {(0, 3), (1, 3), (2, 3), (4, 6), (5, 6)} <= low
+    assert not any(7 in p for p in low)
+
+
 def test_simhash_neardup_banded_equals_bruteforce(spark):
     """The Manku-banded Hamming-LSH pairs equal exact all-pairs
     bit_count(xor) <= d for every d < bands (the pigeonhole lemma

@@ -9,7 +9,8 @@ def _diffs(history, epoch):
     """Net weight change per value tuple: diff x __epoch_diff, so the
     recompute encoding (diff=1, epoch=-1) and the delta-pipeline
     encoding (diff=-1, epoch=1) compare equal — both mean one
-    retraction."""
+    retraction. A recomputed rule without a ``diff`` column (an
+    Aggregate) weighs each row by ``__epoch_diff`` alone."""
 
     out = {}
     for e, rows in history:
@@ -17,7 +18,10 @@ def _diffs(history, epoch):
             continue
         for r in rows:
             t = tuple(r)
-            key, net = t[:-2], t[-2] * t[-1]
+            if "diff" in r.__fields__:
+                key, net = t[:-2], t[-2] * t[-1]
+            else:
+                key, net = t[:-1], t[-1]
             out[key] = out.get(key, 0) + net
     return {k: v for k, v in out.items() if v != 0}
 
@@ -61,6 +65,40 @@ def test_reactive_uninterest(engine):
     assert session.interests == {}
     # transacting after teardown does not fail
     session.transact([Datom.add(2, "x", 2)])
+
+
+def test_recompute_diffs_read_both_cached_snapshots(engine):
+    """A recompute interest's diffs are the two exceptAlls of the
+    current and the previous snapshot. The previous snapshot must stay
+    cached until the callback has consumed them: unpersisted earlier,
+    the diffs re-evaluate last epoch's whole plan from its source.
+    Inside the callback, both sides of each exceptAll in the
+    cache-substituted plan are InMemoryRelations; after the epoch the
+    superseded snapshot is released."""
+
+    from pyspark.storagelevel import StorageLevel
+
+    engine.create_attribute("x")
+    engine.register("xs", MatchA("?e", "x", "?v"))
+    session = ReactiveSession(engine)
+    seen: list[tuple[int, int]] = []
+
+    def on_diffs(diffs, epoch):
+        plan = diffs._jdf.queryExecution().withCachedData().toString()
+        seen.append(
+            (plan.count("InMemoryRelation"), plan.count("Except All"))
+        )
+        diffs.collect()
+
+    session.interest("xs", callback=on_diffs, incremental=False)
+    session.transact([Datom.add(1, "x", 1)])
+    first = session.interests["xs"].previous
+    session.transact([Datom.add(2, "x", 2)])
+    session.transact([Datom.retract(1, "x", 1)])
+    assert seen == [(1, 0), (4, 2), (4, 2)]
+    assert first.storageLevel == StorageLevel.NONE
+    assert session.interests["xs"].retired == []
+    assert session.interests["xs"].previous.storageLevel != StorageLevel.NONE
 
 
 def test_hector_rule_uses_delta_join(engine):
